@@ -5,7 +5,8 @@ L10-L28), driving the Spark-native pipeline:
         -l localhost -p 30003 -d ./adsb_out --batch-seconds 5
 
 Option mapping (reference -> here):
-    -l/--location, -p/--port        -> sbs1 source options (unchanged)
+    -l/--location, -p/--port        -> the sbs1 source's one receiver
+                                       (--hosts lists several instead)
     -d/--database                   -> output directory (parquet Silver +
                                        dead-letter); add --sqlite for the
                                        drop-in SQLite parity artifact
@@ -43,8 +44,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--connect-attempt-delay", type=float, default=5.0,
                    help="seconds to wait after a failed connection attempt")
     p.add_argument("--hosts", default=None,
-                   help="comma-separated host:port receivers (multi-"
-                   "receiver fan-in; overrides -l/-p)")
+                   help="comma-separated host:port receivers (several "
+                   "feeds into one stream; overrides -l/-p)")
     p.add_argument("--engine", choices=("python", "jvm"),
                    default="python",
                    help="ingest source engine: 'python' (the default "
@@ -61,9 +62,9 @@ def main(argv: list[str] | None = None) -> None:
 
     from .session import get_spark
     from .sources.sbs1 import silver
+    from .sources.sbs1_source import _parse_hosts
     from .streaming.monitor import IngestCounters, supervise
     from .streaming.pipeline import (
-        bronze_from_sbs1,
         bronze_from_sbs1_jvm,
         bronze_from_sbs1_multi,
         silver_batch_writer,
@@ -90,32 +91,19 @@ def main(argv: list[str] | None = None) -> None:
         if args.sqlite:
             write_sqlite_batch(silver(batch), args.sqlite, batch_id)
 
-    hosts = None
-    if args.hosts:
-        hosts = [
-            (h.rsplit(":", 1)[0], int(h.rsplit(":", 1)[1]))
-            if ":" in h
-            else (h, 30003)
-            for h in (p.strip() for p in args.hosts.split(","))
-            if h
-        ]
+    hosts = _parse_hosts(args.hosts or f"{args.location}:{args.port}")
+    bronze_from = (
+        bronze_from_sbs1_jvm if args.engine == "jvm" else bronze_from_sbs1_multi
+    )
 
     def start():
-        opts = dict(
+        bronze = bronze_from(
+            spark,
+            hosts,
             buffer_size=args.buffer_size,
             connect_attempt_limit=args.connect_attempt_limit,
             connect_attempt_delay=args.connect_attempt_delay,
         )
-        if args.engine == "jvm":
-            bronze = bronze_from_sbs1_jvm(
-                spark, hosts or [(args.location, args.port)], **opts
-            )
-        elif hosts:
-            bronze = bronze_from_sbs1_multi(spark, hosts, **opts)
-        else:
-            bronze = bronze_from_sbs1(
-                spark, args.location, args.port, **opts
-            )
         return (
             silver_stream(bronze)
             .writeStream.foreachBatch(write_batch)

@@ -22,12 +22,3 @@ def scaled_int(col: Column, scale: int = 100) -> Column:
 
 def scaled_int_sql(expr: str, scale: int = 100) -> str:
     return f"CAST(round(({expr}) * {scale}) AS BIGINT)"
-
-
-def exact_money_sum(col: Column, scale: int = 100) -> Column:
-    """SUM(money) with deterministic result: sum in cents, divide once."""
-    return F.sum(scaled_int(col, scale)) / float(scale)
-
-
-def exact_money_sum_sql(expr: str, scale: int = 100) -> str:
-    return f"SUM({scaled_int_sql(expr, scale)}) / {float(scale)}"

@@ -43,21 +43,6 @@ def portable_hash4_hi_sql(expr: str) -> str:
     return f"CAST('0x' || substring(md5(CAST(({expr}) AS VARCHAR)), 16, 1) AS BIGINT)"
 
 
-def minhash_value(h: Column, a: int, b: int) -> Column:
-    """One member of a universal hash family over a base hash.
-
-    ``(a*h + b) mod p`` with p = 2^31-1; a, b fixed per family member so
-    Spark and the oracle agree. Kept within long range: h < 2^60 would
-    overflow on multiply, so fold h into [0, p) first.
-    """
-    hm = h % MERSENNE31
-    return (F.lit(a) * hm + F.lit(b)) % MERSENNE31
-
-
-def minhash_value_sql(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * (({h_expr}) % {MERSENNE31}) + {b}) % {MERSENNE31})"
-
-
 def portable_unit_float(col: Column) -> Column:
     """Deterministic pseudo-random float in [-1, 1) from a string column.
 

@@ -70,14 +70,6 @@ def spread_exchange_count(plan: str) -> int:
     ) + plan.count("Arguments: hashpartitioning(xxhash64(")
 
 
-def keyed_exchange_count(df: DataFrame) -> int:
-    """Exchanges carrying a keyed (hash/range) shuffle -- the
-    scale-posture number the round-pins assert. Excludes the
-    conditional scan_spread round-robin (see spread_exchange_count)."""
-    plan = formatted_plan(df)
-    return plan.count(") Exchange") - spread_exchange_count(plan)
-
-
 def executed_plan(df: DataFrame) -> str:
     """Final (post-AQE) physical plan; executes the query to get it.
 

@@ -53,13 +53,6 @@ SBS1_FIELDS: tuple[tuple[str, str], ...] = (
     ("is_on_ground", "int"),
 )
 
-#: Silver DDL including the ingest-added 23rd column (Appendix A L60:
-#: ``parsed_time`` TEXT -> TimestampType here).
-SQUITTERS_DDL = (
-    ", ".join(f"{name} {typ}" for name, typ in SBS1_FIELDS)
-    + ", parsed_time timestamp"
-)
-
 #: Which MSG transmission types populate which nullable fields
 #: (SURVEY.md §1.2 sparse-union matrix) -- used by tests.
 POPULATION_MATRIX: dict[int, set[str]] = {
@@ -168,22 +161,4 @@ def dead_letter(parsed: DataFrame) -> DataFrame:
     return parsed.filter(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw_line"),
         F.lit("arity != 22").alias("reason"),
-    )
-
-
-def create_squitters_table(spark, location: str, name: str = "squitters") -> None:
-    """DDL bootstrap (Appendix A L37-L62 twin): partitioned parquet table.
-
-    Partitioning by parse date keeps time-range scans pruned; at 100 TB
-    add bucketing by hex_ident for shuffle-free per-aircraft analytics.
-    """
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {name} ({SQUITTERS_DDL},
-            generated_ts timestamp, logged_ts timestamp,
-            parsed_date date)
-        USING parquet
-        PARTITIONED BY (parsed_date)
-        LOCATION '{location}'
-        """
     )

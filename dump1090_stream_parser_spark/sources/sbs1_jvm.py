@@ -28,12 +28,14 @@ classloader, which ``addJar`` cannot extend after the fact. Use
     spark = get_spark(..., extra_conf=jvm_source_conf())
     bronze = bronze_from_sbs1_jvm(spark, [("h1", 30003), ...])
 
-The jar is committed; :func:`jvm_source_jar` rebuilds it from source
-when missing and a JDK is available (``java/build.sh``).
+The jar is committed with a sha256 of its build inputs beside it;
+:func:`jvm_source_jar` rebuilds it from source (``java/build.sh``, needs
+a JDK) when it is missing or that hash no longer matches.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import subprocess
 
@@ -41,32 +43,53 @@ _JAVA_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "java",
 )
-_JAR = os.path.join(_JAVA_DIR, "sbs1-jvm-source.jar")
+
+#: The jar's build inputs, relative to ``java/``: a change to any of
+#: them makes the committed jar stale.
+_BUILD_INPUTS = (
+    "src/sbs1/Sbs1JvmSource.java",
+    "src/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister",
+    "build.sh",
+)
+
+
+def _build_inputs_sha256(java_dir: str) -> str:
+    digest = hashlib.sha256()
+    for rel in _BUILD_INPUTS:
+        digest.update(rel.encode() + b"\0")
+        with open(os.path.join(java_dir, rel), "rb") as f:
+            digest.update(f.read())
+    return digest.hexdigest()
 
 
 def jvm_source_jar() -> str:
     """Path to the source jar, building it from the committed Java
     source if absent OR STALE (requires javac; the jar itself is
-    committed, so this is normally a no-op). Staleness is an mtime
-    compare against the .java source and build.sh -- without it, an
-    edit to Sbs1JvmSource.java left the committed jar silently serving
-    the old class bytes to conftest, the CLI, and every test (ADVICE
-    r12)."""
-    inputs = [
-        os.path.join(_JAVA_DIR, "src", "sbs1", "Sbs1JvmSource.java"),
-        os.path.join(_JAVA_DIR, "build.sh"),
-    ]
-    stale = not os.path.exists(_JAR) or any(
-        os.path.exists(p) and os.path.getmtime(p) > os.path.getmtime(_JAR)
-        for p in inputs
-    )
-    if stale:
+    committed, so this is normally a no-op).
+
+    Staleness is decided by content, not mtime: the sha256 of the build
+    inputs is stored beside the jar (``sbs1-jvm-source.jar.sha256``)
+    and the jar is rebuilt only when that hash no longer matches. An
+    edit to Sbs1JvmSource.java therefore never leaves the committed jar
+    serving the old class bytes (ADVICE r12), while a fresh checkout --
+    whose files all carry new mtimes -- does not rewrite it."""
+    jar = os.path.join(_JAVA_DIR, "sbs1-jvm-source.jar")
+    stamp = jar + ".sha256"
+    want = _build_inputs_sha256(_JAVA_DIR)
+    try:
+        with open(stamp) as f:
+            have = f.read().strip()
+    except FileNotFoundError:
+        have = None
+    if have != want or not os.path.exists(jar):
         subprocess.run(
             ["sh", os.path.join(_JAVA_DIR, "build.sh")],
             check=True,
             capture_output=True,
         )
-    return _JAR
+        with open(stamp, "w") as f:
+            f.write(want + "\n")
+    return jar
 
 
 def jvm_source_conf() -> dict[str, str]:

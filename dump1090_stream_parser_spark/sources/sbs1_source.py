@@ -2,36 +2,38 @@
 
 Re-expresses the reference's TCP client loop -- connect with retry/backoff,
 recv into a carry buffer, split lines, stamp receive time (Appendix A
-L64-L77, L92-L124, L155-L166) -- as a Spark 4 ``DataSource`` +
-``SimpleDataSourceStreamReader``:
+L64-L77, L92-L124, L155-L166) -- as a Spark 4 ``DataSource`` with ONE
+reader, :class:`Sbs1PartitionedStreamReader`, for one feed or many:
 
-- options mirror the reference CLI (A13): ``location``, ``port``,
-  ``buffer_size``, ``connect_attempt_limit``, ``connect_attempt_delay``;
+- option ``hosts="h1:p1,h2:p2,..."`` lists the receivers; the
+  reference's single feed (CLI ``-l/-p``) is a one-entry list, built
+  with :func:`_parse_hosts`. The other options mirror the reference CLI
+  (A13): ``buffer_size``, ``connect_attempt_limit``,
+  ``connect_attempt_delay``; plus ``replay_capacity``,
+  ``max_lines_per_batch`` and ``rows_per_partition``;
 - per-ROW receive timestamp (``ingest_ts``) -- the faithful
   ``parsed_time`` semantics the reference has and per-batch
   ``current_timestamp()`` lacks (SURVEY.md §7.4.2);
-- offsets are cumulative line counts; a bounded replay cache makes
-  recent offset ranges re-readable so micro-batch retries don't lose
-  data. Ephemeral-TCP loss on disconnect is inherent to the medium and
+- one receiver THREAD per host drains its socket concurrently with
+  micro-batch processing (recv + framing only -- recv releases the
+  GIL); offsets are per-receiver cumulative line counts, and each
+  micro-batch plans data-bearing partitions so decode + parse +
+  downstream work run executor-parallel;
+- a bounded replay buffer makes planned offset ranges re-readable, so
+  task retries are exactly-once into the batch; a full buffer pauses
+  recv (TCP backpressure) instead of evicting rows; ``commit`` prunes
+  it, and after a restart from a checkpoint the first offset Spark
+  supplies renumbers the fresh connection (``_ReceiverThread.rebase``).
+  Ephemeral-TCP loss on disconnect is inherent to the medium and
   identical to the reference (SURVEY.md §3.2) -- mitigate upstream with
   a durable bus if needed.
 
-Scale note: one TCP broadcast is a single-connection, low-rate feed
-(~10-1.5k msg/s, BASELINE.md), so a driver-side simple reader is the
-right tool for ONE feed. A multi-receiver deployment uses the
-partitioned :class:`Sbs1PartitionedStreamReader` (option
-``hosts="h1:p1,h2:p2,..."``): N receiver THREADS drain their sockets
-concurrently (recv + framing only -- recv releases the GIL), offsets
-are per-receiver line counts, and each micro-batch plans one
-data-bearing partition per receiver so decode + parse + downstream
-work run executor-parallel.
-
-Why the sockets stay driver-side even in the partitioned form: the
-Python data source API executes ``read(partition)`` in POOLED executor
-workers with no task->worker affinity ("this method is static and
-stateless", pyspark.sql.datasource), and an SBS-1 broadcast is
-UNSEEKABLE -- every new connection receives the feed from connect time
-onward. Socket state held in executor workers therefore duplicates
+Why the sockets stay driver-side: the Python data source API executes
+``read(partition)`` in POOLED executor workers with no task->worker
+affinity ("this method is static and stateless",
+pyspark.sql.datasource), and an SBS-1 broadcast is UNSEEKABLE --
+every new connection receives the feed from connect time onward.
+Socket state held in executor workers therefore duplicates
 rows whenever a receiver's task lands on a different worker while the
 old worker's socket still buffers (each socket gets its own full copy
 of the feed) and loses rows on every handover. A single long-lived
@@ -56,17 +58,14 @@ from __future__ import annotations
 
 import socket
 import threading
-import time
 from collections import deque
 from datetime import datetime, timezone
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -74,111 +73,17 @@ from pyspark.sql.types import StructType
 SBS1_BRONZE_DDL = "value string, ingest_ts timestamp"
 
 
-class Sbs1StreamReader(SimpleDataSourceStreamReader):
-    """Driver-side reader with reconnect/backoff and partial-line carry."""
-
-    def __init__(self, options: dict):
-        self.host = options.get("location", "localhost")
-        self.port = int(options.get("port", 30003))
-        self.buffer_size = int(options.get("buffer_size", 65536))
-        self.attempt_limit = int(options.get("connect_attempt_limit", 10))
-        self.attempt_delay = float(options.get("connect_attempt_delay", 5.0))
-        self.max_lines_per_batch = int(options.get("max_lines_per_batch", 100000))
-        self.replay_capacity = int(options.get("replay_capacity", 1_000_000))
-        self._sock: socket.socket | None = None
-        self._carry = b""  # partial-line carry across recvs (A2)
-        self._next_line = 0  # cumulative line counter = offset
-        self._replay: deque[tuple[int, tuple]] = deque(maxlen=self.replay_capacity)
-
-    # -- offset protocol ----------------------------------------------------
-
-    def initialOffset(self) -> dict:
-        return {"line": 0}
-
-    def read(self, start: dict):
-        rows = self._poll_lines()
-        for i, row in enumerate(rows):
-            self._replay.append((self._next_line + i, row))
-        self._next_line += len(rows)
-        return iter(rows), {"line": self._next_line}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo, hi = start["line"], end["line"]
-        return iter(
-            row for line_no, row in self._replay if lo <= line_no < hi
-        )
-
-    def commit(self, end: dict) -> None:
-        # Offsets up to `end` are durably checkpointed; drop replay rows.
-        while self._replay and self._replay[0][0] < end["line"]:
-            self._replay.popleft()
-
-    # -- socket management (A1/A9 parity) ------------------------------------
-
-    def _connect(self) -> socket.socket:
-        attempts = 0
-        while True:
-            try:
-                s = socket.create_connection(
-                    (self.host, self.port), timeout=self.attempt_delay
-                )
-                s.setblocking(False)
-                return s
-            except OSError:
-                attempts += 1
-                if attempts >= self.attempt_limit:
-                    raise ConnectionError(
-                        f"sbs1: gave up connecting to {self.host}:{self.port} "
-                        f"after {attempts} attempts"
-                    )
-                time.sleep(self.attempt_delay)
-
-    def _poll_lines(self) -> list[tuple]:
-        """Drain whatever the socket has right now into framed lines."""
-        if self._sock is None:
-            self._sock = self._connect()
-        rows: list[tuple] = []
-        while len(rows) < self.max_lines_per_batch:
-            try:
-                chunk = self._sock.recv(self.buffer_size)
-            except BlockingIOError:
-                break  # nothing more buffered; end the micro-batch
-            except OSError:
-                chunk = b""
-            if chunk == b"":
-                # dead connection (empty recv, Appendix A L98) -> reconnect
-                try:
-                    self._sock.close()
-                finally:
-                    self._sock = None
-                break
-            self._carry += chunk
-            *complete, self._carry = self._carry.split(b"\n")
-            now = datetime.now(timezone.utc).replace(tzinfo=None)
-            rows.extend(
-                (line.decode("utf-8", errors="replace").rstrip("\r"), now)
-                for line in complete
-                if line
-            )
-        return rows
-
-
-# --------------------------------------------------------------------------
-# Partitioned multi-receiver reader (VERDICT r9 ask #1)
-# --------------------------------------------------------------------------
-
-
 class _ReceiverThread(threading.Thread):
     """One background drain loop per receiver: connect with
     retry/backoff (A9), recv into the partial-line carry (A2), frame on
     ``\\n``, stamp receive time, append to a bounded replay buffer.
 
-    Runs CONCURRENTLY with micro-batch processing -- the win over the
-    simple reader, whose single socket is drained only inside read()
-    and serially with everything else. recv blocks with a short
-    timeout and releases the GIL, so N receivers genuinely overlap;
-    per-line Python work here is one C-level split -- decode and tuple
-    building are deferred to the executors via the partition payload.
+    Runs CONCURRENTLY with micro-batch processing, so draining never
+    waits on a batch and a batch never waits on recv. recv blocks with
+    a short timeout and releases the GIL, so N receivers genuinely
+    overlap; per-line Python work here is one C-level split -- decode
+    and tuple building are deferred to the executors via the partition
+    payload.
     """
 
     def __init__(
@@ -552,12 +457,11 @@ def _parse_hosts(spec: str) -> list[tuple[str, int]]:
 
 
 class Sbs1DataSource(DataSource):
-    """``spark.readStream.format("sbs1")`` -- SBS-1 BaseStation TCP feed.
+    """``spark.readStream.format("sbs1")`` -- SBS-1 BaseStation TCP feed(s).
 
-    Single feed (``location``/``port`` options) -> driver-side simple
-    reader; multi-receiver (``hosts`` option) -> partitioned reader
-    with one concurrent drain thread + one executor partition per
-    receiver."""
+    Option ``hosts`` lists the receivers (one entry for a single feed);
+    each gets a concurrent drain thread and its own executor
+    partitions."""
 
     @classmethod
     def name(cls) -> str:
@@ -567,16 +471,7 @@ class Sbs1DataSource(DataSource):
         return SBS1_BRONZE_DDL
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        if self.options.get("hosts"):
-            return Sbs1PartitionedStreamReader(self.options)
-        # no hosts option -> Spark falls back to simpleStreamReader
-        raise PySparkNotImplementedError(
-            errorClass="NOT_IMPLEMENTED",
-            messageParameters={"feature": "streamReader"},
-        )
-
-    def simpleStreamReader(self, schema: StructType) -> Sbs1StreamReader:
-        return Sbs1StreamReader(self.options)
+        return Sbs1PartitionedStreamReader(self.options)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -587,7 +482,12 @@ def _ship_package(spark: SparkSession) -> None:
     -- true when the driver happens to run from the repo root, false
     anywhere else. Shipping a zip via addPyFile puts the package on
     every worker's path (and on executors, which matters off local mode).
+
+    The zip is named by a hash of the package's ``.py`` contents, so a
+    zip left in the temp dir by another checkout or an older version is
+    never shipped in place of the current sources.
     """
+    import hashlib
     import os
     import tempfile
     import zipfile
@@ -595,20 +495,32 @@ def _ship_package(spark: SparkSession) -> None:
     import dump1090_stream_parser_spark as pkg
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    files = sorted(
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(pkg_dir)
+        for f in names
+        if f.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for full in files:
+        digest.update(os.path.relpath(full, pkg_dir).encode() + b"\0")
+        with open(full, "rb") as fh:
+            digest.update(fh.read())
     zip_path = os.path.join(
-        tempfile.gettempdir(), "dump1090_stream_parser_spark.zip"
+        tempfile.gettempdir(),
+        f"dump1090_stream_parser_spark-{digest.hexdigest()[:16]}.zip",
     )
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            os.path.basename(pkg_dir),
-                            os.path.relpath(full, pkg_dir),
-                        )
-                        zf.write(full, rel)
+        # write aside, then rename: a concurrent or interrupted writer
+        # never leaves a partial zip under the final name
+        part = f"{zip_path}.{os.getpid()}.part"
+        with zipfile.ZipFile(part, "w") as zf:
+            for full in files:
+                rel = os.path.join(
+                    os.path.basename(pkg_dir), os.path.relpath(full, pkg_dir)
+                )
+                zf.write(full, rel)
+        os.replace(part, zip_path)
     spark.sparkContext.addPyFile(zip_path)
 
 

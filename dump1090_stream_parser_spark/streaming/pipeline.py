@@ -4,8 +4,10 @@ The reference's whole runtime is one loop: recv -> frame -> validate ->
 stamp -> batched INSERT with commit every N rows and reconnect
 supervision (SURVEY.md §3.1). Its Spark-native equivalent:
 
-- source: custom ``sbs1`` data source (prod), builtin socket (dev), or
-  file replay (tests) -- all produce the same Bronze schema;
+- source: the custom ``sbs1`` data source over a list of (host, port)
+  receivers -- one entry for the reference's single feed -- or its
+  JVM twin ``sbs1-jvm`` for high-rate feeds, or file replay (tests);
+  all produce the same Bronze schema;
 - transform: :func:`sources.sbs1.parse_lines` -- the SAME expression set
   batch uses, so stream/batch parity holds by construction;
 - sink: ``foreachBatch`` appending partitioned parquet. Checkpointed
@@ -38,43 +40,16 @@ def bronze_from_file_replay(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.text(path)
 
 
-def bronze_from_socket(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """Builtin socket source -- dev only, no fault tolerance (A1 dev path)."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-
-
-def bronze_from_sbs1(
-    spark: SparkSession, host: str = "localhost", port: int = 30003, **options
-) -> DataFrame:
-    """The custom ``sbs1`` source: reconnect/backoff + per-row receive
-    timestamps (A1/A2/A9/A13). Options mirror the reference CLI
-    (Appendix A L13-L26): buffer_size, connect_attempt_limit,
-    connect_attempt_delay."""
-    from ..sources.sbs1_source import register
-
-    register(spark)
-    reader = (
-        spark.readStream.format("sbs1")
-        .option("location", host)
-        .option("port", str(port))
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
-
-
 def bronze_from_sbs1_multi(
     spark: SparkSession, hosts: list[tuple[str, int]], **options
 ) -> DataFrame:
-    """Multi-receiver ``sbs1`` source: the partitioned reader
-    (one concurrent drain thread + one executor partition per
-    receiver -- sources/sbs1_source.py Sbs1PartitionedStreamReader).
-    ``hosts`` is a list of (host, port) pairs."""
+    """The custom ``sbs1`` source (sources/sbs1_source.py
+    Sbs1PartitionedStreamReader): one concurrent drain thread and its
+    own executor partitions per receiver, reconnect/backoff and
+    per-row receive timestamps (A1/A2/A9/A13). ``hosts`` is a list of
+    (host, port) pairs -- one pair for a single feed. Options mirror
+    the reference CLI (Appendix A L13-L26): buffer_size,
+    connect_attempt_limit, connect_attempt_delay."""
     from ..sources.sbs1_source import register
 
     register(spark)
@@ -84,54 +59,6 @@ def bronze_from_sbs1_multi(
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load()
-
-
-def bronze_from_sbs1_fanin(
-    spark: SparkSession,
-    host_groups: list[list[tuple[str, int]]],
-    **options,
-) -> DataFrame:
-    """Fan-in across receiver groups: one partitioned ``sbs1`` source
-    INSTANCE per host group, unioned into one streaming query.
-
-    MEASURED LIMIT (BASELINE.md round-11 row, correcting this
-    docstring's original claim): source instances do NOT get separate
-    Python processes -- SimpleDataSourceStreamReader prefetch runs in
-    the DRIVER process, so every group's drain threads share the one
-    driver GIL and only the TOTAL thread count matters: 2x4 fan-in
-    measures 155k rows/s ~= the single-source 8-receiver point (145k),
-    and 2x2 measures 250k ~= the single-source 4-receiver point
-    (a process census during the run shows exactly one Python process).
-    Use this form for its real benefits -- per-group source options,
-    per-source offset logs, bounded per-source replay buffers -- and
-    keep total receivers <= ~4 per DRIVER for throughput. Scaling
-    drain capacity past one driver's GIL means separate ingest jobs on
-    separate MACHINES (or a box with idle cores), or moving framing
-    out of Python; recv() itself releases the GIL -- the ceiling is
-    the Python-side line splitting and offset bookkeeping. Same-box
-    multi-process is ALSO measured and does NOT pay
-    (`tools/ingest_bench.py procs`): two concurrent drivers on this
-    32-core box get ~105k rows/s each vs 305k solo -- the second
-    driver's executors cannibalize the cores the first one's
-    decode/parse stages were using.
-
-    Union of streaming DataFrames keeps
-    per-source offsets independent in the checkpoint -- exactly-once
-    delivery per receiver is preserved (pinned end-to-end in
-    tests/test_streaming.py)."""
-    if not host_groups:
-        raise ValueError(
-            "bronze_from_sbs1_fanin needs at least one host group"
-            " (got an empty host_groups list)"
-        )
-    streams = [
-        bronze_from_sbs1_multi(spark, group, **options)
-        for group in host_groups
-    ]
-    out = streams[0]
-    for s in streams[1:]:
-        out = out.unionAll(s)
-    return out
 
 
 def bronze_from_sbs1_jvm(
@@ -198,40 +125,6 @@ def bronze_from_sbs1_jvm(
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load()
-
-
-def bronze_from_socket_fanin(
-    spark: SparkSession, hosts: list[tuple[str, int]]
-) -> DataFrame:
-    """Union of builtin JVM ``socket`` sources with per-row receive
-    timestamps -- kept as the reproduction harness for a MEASURED
-    NEGATIVE (BASELINE.md round 12): the builtin source's framing is
-    fast (JVM reader thread), but each buffered row ships to executor
-    tasks inside the task closure via per-row Java serialization;
-    addBatch measured ~56k rows/s on 2M-row batches, so end-to-end
-    throughput (46k rows/s at 8M x 8 receivers) lands 5x BELOW the
-    Python sbs1 source's GIL-bound ~300k. Use
-    :func:`bronze_from_sbs1_jvm` for throughput; this form remains
-    useful only for dependency-free dev sessions at wire-rate feeds."""
-    if not hosts:
-        raise ValueError(
-            "bronze_from_socket_fanin needs at least one (host, port)"
-        )
-    streams = [
-        (
-            spark.readStream.format("socket")
-            .option("host", host)
-            .option("port", str(port))
-            .option("includeTimestamp", "true")
-            .load()
-            .toDF("value", "ingest_ts")
-        )
-        for host, port in hosts
-    ]
-    out = streams[0]
-    for s in streams[1:]:
-        out = out.unionByName(s)
-    return out
 
 
 # --------------------------------------------------------------------------

@@ -258,7 +258,3 @@ def load_table(
     if spread:
         df = scan_spread(spark, df, path)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -64,13 +64,6 @@ def _canon_cell(v, kind: str) -> str:
     return canon(v)
 
 
-def rows_multiset(cols: list[str], rows: list[tuple]) -> list[str]:
-    """Order-insensitive canonical form: sort columns by name, then rows
-    (dtype-agnostic; for callers holding plain Python rows)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(canon(r[i]) for i in order) for r in rows)
-
-
 def _pdf_multiset(pdf: pd.DataFrame) -> list[str]:
     cols = sorted(pdf.columns)
     kinds = {c: pdf[c].dtype.kind for c in pdf.columns}

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from dump1090_stream_parser_spark.sources.sbs1 import parse_lines, silver
 from dump1090_stream_parser_spark.streaming.pipeline import (
     bronze_from_file_replay,
-    bronze_from_sbs1,
+    bronze_from_sbs1_multi,
     silver_stream,
     write_silver,
 )
@@ -71,8 +71,8 @@ def test_sbs1_source_end_to_end(spark, tmp_path):
     port = server.server_address[1]
     threading.Thread(target=server.serve_forever, daemon=True).start()
     try:
-        bronze = bronze_from_sbs1(
-            spark, "127.0.0.1", port, connect_attempt_limit=3
+        bronze = bronze_from_sbs1_multi(
+            spark, [("127.0.0.1", port)], connect_attempt_limit=3
         )
         parsed = silver_stream(bronze)
         q = (
@@ -104,34 +104,6 @@ def test_sbs1_source_end_to_end(spark, tmp_path):
     finally:
         server.shutdown()
         server.server_close()
-
-
-def test_sbs1_source_reconnect_backoff():
-    """A9 parity: reader retries with delay, then raises after the limit."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import Sbs1StreamReader
-
-    # Find a port with nothing listening.
-    s = socket.socket()
-    s.bind(("127.0.0.1", 0))
-    dead_port = s.getsockname()[1]
-    s.close()
-
-    reader = Sbs1StreamReader(
-        {
-            "location": "127.0.0.1",
-            "port": str(dead_port),
-            "connect_attempt_limit": "2",
-            "connect_attempt_delay": "0.05",
-        }
-    )
-    t0 = time.time()
-    try:
-        reader.read(reader.initialOffset())
-        raised = False
-    except ConnectionError:
-        raised = True
-    assert raised
-    assert time.time() - t0 >= 0.05  # at least one backoff sleep happened
 
 
 def test_silver_sink_idempotent_on_batch_replay(spark, tmp_path):
@@ -273,132 +245,11 @@ def _serve_once(port: int, lines: list[str]) -> socketserver.TCPServer:
     return server
 
 
-def test_sbs1_source_survives_server_kill(spark, tmp_path):
-    """A9 end-to-end: the feed dies mid-stream and comes back; committed
-    offsets must survive -- every line delivered before the kill and
-    every line after the reconnect lands exactly once (ephemeral-TCP
-    semantics: nothing is sent while disconnected, so nothing is lost)."""
-    part1, part2 = GOLDEN[: len(GOLDEN) // 2], GOLDEN[len(GOLDEN) // 2 :]
-
-    # OS-assigned free port, then release it for the phase-1 server.
-    probe = socket.socket()
-    probe.bind(("127.0.0.1", 0))
-    port = probe.getsockname()[1]
-    probe.close()
-
-    server = _serve_once(port, part1)
-    q = None
-    try:
-        bronze = bronze_from_sbs1(
-            spark,
-            "127.0.0.1",
-            port,
-            connect_attempt_limit=100,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_kill_test")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-
-        def count() -> int:
-            return spark.sql(
-                "SELECT count(*) FROM sbs1_kill_test"
-            ).collect()[0][0]
-
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < len(part1):
-            time.sleep(0.5)
-        assert count() == len(part1), "phase-1 lines not all delivered"
-
-        # Hard kill: connections drop, reader sees empty recv and enters
-        # its reconnect loop.
-        server.shutdown()
-        server.server_close()
-        time.sleep(1.0)
-        server = _serve_once(port, part2)
-
-        want = len(part1) + len(part2)
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < want:
-            time.sleep(0.5)
-
-        rows = [r["value"] for r in spark.sql(
-            "SELECT value FROM sbs1_kill_test"
-        ).collect()]
-        # exactly once: no pre-kill line replayed, no post-kill line lost
-        assert sorted(rows) == sorted(part1 + part2)
-    finally:
-        if q is not None:
-            q.stop()
-        server.shutdown()
-        server.server_close()
-
-
-def test_sbs1_reader_replay_protocol():
-    """The offset/replay contract that exactly-once delivery rests on,
-    driven directly on the reader object: a re-read of an already-read
-    offset range (micro-batch retry) returns the identical rows, and
-    commit(end) prunes the replay cache below the checkpointed offset."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1StreamReader,
-    )
-
-    class _Serve(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(("\n".join(GOLDEN) + "\n").encode())
-            time.sleep(10)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _Serve)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        reader = Sbs1StreamReader(
-            {"location": "127.0.0.1", "port": str(port)}
-        )
-        rows: list = []
-        start = reader.initialOffset()
-        deadline = time.time() + 30
-        end = start
-        while len(rows) < len(GOLDEN) and time.time() < deadline:
-            it, end = reader.read(end)
-            rows.extend(it)
-            time.sleep(0.1)
-        assert [r[0] for r in rows] == GOLDEN
-        assert end == {"line": len(GOLDEN)}
-
-        # retry of the full range -> identical rows, same order
-        replay = list(reader.readBetweenOffsets(start, end))
-        assert replay == rows
-        # partial range
-        mid = {"line": 2}
-        assert list(reader.readBetweenOffsets(start, mid)) == rows[:2]
-
-        # checkpoint commit prunes the cache below the offset...
-        reader.commit(mid)
-        assert list(reader.readBetweenOffsets(start, end)) == rows[2:]
-        # ...and the still-uncommitted suffix remains retryable
-        assert list(reader.readBetweenOffsets(mid, end)) == rows[2:]
-    finally:
-        server.shutdown()
-        server.server_close()
-
-
 def test_sbs1_partitioned_source_end_to_end(spark, tmp_path):
     """The multi-receiver partitioned reader (hosts=...): every
     receiver's lines arrive exactly once, partial-line carry reassembles
     per receiver, and per-row ingest_ts is stamped. Each server tags its
     callsign so delivery can be attributed per receiver."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
     n_receivers = 3
     per_recv = {}
     servers = []
@@ -463,127 +314,12 @@ def test_sbs1_partitioned_source_end_to_end(spark, tmp_path):
             s.server_close()
 
 
-def test_sbs1_partitioned_reader_replay_and_commit():
-    """Unit-level offset protocol: partitions(start, end) re-reads the
-    same rows for the same range (task-retry exactly-once), commit
-    prunes the replay buffer, and a checkpoint-ahead restart
-    fast-forwards instead of wedging."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    lines = [f"MSG,8,1,1,ABC00{i},1,,,,,,,,,,,,,,,,0" for i in range(25)]
-    payload = ("\n".join(lines) + "\n").encode()
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(payload)
-            time.sleep(30)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    reader = None
-    try:
-        reader = Sbs1PartitionedStreamReader(
-            {
-                "hosts": f"127.0.0.1:{port}",
-                "connect_attempt_limit": "5",
-                "connect_attempt_delay": "0.2",
-            }
-        )
-        assert reader.initialOffset() == {"r0": 0}
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            end = reader.latestOffset()
-            if end["r0"] >= len(lines):
-                break
-            time.sleep(0.1)
-        assert end["r0"] == len(lines)
-        start = {"r0": 0}
-
-        def materialize(parts):
-            out = []
-            for p in parts:
-                for batch in reader.read(p):
-                    out.extend(
-                        (r["value"], r["ingest_ts"])
-                        for r in batch.to_pylist()
-                    )
-            return out
-
-        parts1 = reader.partitions(start, end)
-        parts2 = reader.partitions(start, end)  # task retry: same rows
-        rows1 = materialize(parts1)
-        rows2 = materialize(parts2)
-        assert [v for v, _ in rows1] == lines
-        assert rows1 == rows2
-        assert all(ts is not None for _, ts in rows1)
-        # commit prunes: a re-plan of the committed range is now empty
-        reader.commit(end)
-        assert not materialize(reader.partitions(start, end))
-        # checkpoint-ahead restart: fast-forward, no wedge, no rows
-        ahead = {"r0": end["r0"] + 1000}
-        assert reader.partitions(ahead, ahead) == []
-        later = reader.latestOffset()
-        assert later["r0"] >= end["r0"]
-    finally:
-        if reader is not None:
-            reader.stop()
-        server.shutdown()
-        server.server_close()
-
-
-def test_sbs1_partitioned_reader_connect_failure_raises():
-    """A9 parity for the partitioned form: a receiver that exhausts its
-    connect attempts surfaces the ConnectionError on latestOffset."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    s = socket.socket()
-    s.bind(("127.0.0.1", 0))
-    dead_port = s.getsockname()[1]
-    s.close()
-
-    reader = Sbs1PartitionedStreamReader(
-        {
-            "hosts": f"127.0.0.1:{dead_port}",
-            "connect_attempt_limit": "2",
-            "connect_attempt_delay": "0.05",
-        }
-    )
-    try:
-        deadline = time.time() + 10
-        raised = False
-        while time.time() < deadline:
-            try:
-                reader.latestOffset()
-            except ConnectionError:
-                raised = True
-                break
-            time.sleep(0.05)
-        assert raised
-    finally:
-        reader.stop()
-
-
 def test_sbs1_partitioned_source_silver_parity(spark, tmp_path):
-    """The simple-reader end-to-end contract re-run on the PARTITIONED
-    reader: the same GOLDEN + INVALID fixture lines (served across two
+    """test_sbs1_source_end_to_end's contract across TWO receivers:
+    the same GOLDEN + INVALID fixture lines (served across two
     receivers, each split mid-stream to exercise per-receiver carry)
     through silver_stream -- good rows parse, invalid rows dead-letter,
     parsed_time is stamped per row."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-        silver_stream,
-    )
-
     shards = [GOLDEN, INVALID]
     servers, hosts = [], []
     try:
@@ -653,12 +389,6 @@ def test_sbs1_partitioned_source_restart_no_duplicates(spark, tmp_path):
     must keep delivering rows served after the restart. Loss of rows
     served across the restart gap is inherent to ephemeral TCP and
     documented; duplication would be a bug."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
     counter = {"n": 0}
 
     class Handler(socketserver.BaseRequestHandler):
@@ -723,73 +453,6 @@ def test_sbs1_partitioned_source_restart_no_duplicates(spark, tmp_path):
         server.server_close()
 
 
-def test_sbs1_partitioned_reader_restart_rebase_preserves_fresh_lines():
-    """Review finding (round 12): on restart, the fresh connection may
-    out-frame the checkpointed offset during recovery. The old guard
-    then delivered NEW lines mislabeled as the replayed WAL batch and
-    silently dropped the lines below the offset. The rebase contract:
-    the first externally-supplied offset renumbers the fresh stream to
-    start AT it -- the replayed range reads EMPTY (the documented
-    ephemeral-TCP loss), and every recovery-framed line is preserved
-    and delivered after it."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    lines = [f"MSG,8,1,1,RB00{i:02d},1,,,,,,,,,,,,,,,,0" for i in range(25)]
-    payload = ("\n".join(lines) + "\n").encode()
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(payload)
-            time.sleep(30)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    reader = None
-    try:
-        reader = Sbs1PartitionedStreamReader(
-            {
-                "hosts": f"127.0.0.1:{port}",
-                "connect_attempt_limit": "5",
-                "connect_attempt_delay": "0.2",
-            }
-        )
-        # let the drain thread frame everything BEFORE any offset call
-        # (the recovery window: connection live, checkpoint not yet
-        # consulted) -- poke the thread without latestOffset's sync
-        reader._ensure_started()
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            if reader.receivers[0].snapshot_count() >= len(lines):
-                break
-            time.sleep(0.1)
-        assert reader.receivers[0].snapshot_count() == len(lines)
-
-        # first external offsets = the WAL's pending batch [10, 20):
-        # must replay EMPTY, not serve fresh lines mislabeled as it
-        def materialize(parts):
-            out = []
-            for p in parts:
-                for batch in reader.read(p):
-                    out.extend(r["value"] for r in batch.to_pylist())
-            return out
-
-        assert materialize(reader.partitions({"r0": 10}, {"r0": 20})) == []
-        # the fresh lines were PRESERVED: renumbered to start at 20
-        end = reader.latestOffset()
-        assert end["r0"] == 20 + len(lines)
-        got = materialize(reader.partitions({"r0": 20}, end))
-        assert got == lines
-    finally:
-        if reader is not None:
-            reader.stop()
-
-
 def test_sbs1_partitioned_source_survives_server_kill(spark, tmp_path):
     """A9 end-to-end on the PARTITIONED reader: one of two receivers'
     feeds dies mid-stream and comes back; its drain thread reconnects
@@ -797,10 +460,6 @@ def test_sbs1_partitioned_source_survives_server_kill(spark, tmp_path):
     lands exactly once."""
     part1, part2 = GOLDEN[: len(GOLDEN) // 2], GOLDEN[len(GOLDEN) // 2:]
     steady = [f"MSG,8,1,1,CC{i:04d},1,,,,,,,,,,,,,,,,0" for i in range(10)]
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
 
     probe = socket.socket()
     probe.bind(("127.0.0.1", 0))
@@ -870,90 +529,3 @@ def test_sbs1_partitioned_source_survives_server_kill(spark, tmp_path):
         server.server_close()
         steady_server.shutdown()
         steady_server.server_close()
-
-
-def test_sbs1_fanin_rejects_empty_host_groups(spark):
-    """ADVICE r10: an empty host_groups list must be a clear
-    ValueError, not a bare IndexError from streams[0]."""
-    import pytest
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    with pytest.raises(ValueError, match="host group"):
-        bronze_from_sbs1_fanin(spark, [])
-
-
-def test_sbs1_fanin_union_of_source_instances(spark, tmp_path):
-    """The past-the-drain-ceiling fan-in form: TWO partitioned sbs1
-    source INSTANCES (each its own runner process / offset log)
-    unioned into one stream -- every group's lines arrive exactly
-    once, attributable per group by callsign."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    groups, servers, per_group = [], [], {}
-    try:
-        for g in range(2):
-            lines = [
-                f"MSG,1,1,1,4CB{g}D0,1,2026/08/13,11:00:01.000,"
-                f"2026/08/13,11:00:01.050,FG{g}N{j},,,,,,,,,,,"
-                for j in range(25)
-            ]
-            per_group[g] = lines
-            payload = ("\n".join(lines) + "\n").encode()
-
-            class Handler(socketserver.BaseRequestHandler):
-                _payload = payload
-
-                def handle(self):
-                    self.request.sendall(self._payload)
-                    time.sleep(30)
-
-            server = socketserver.ThreadingTCPServer(
-                ("127.0.0.1", 0), Handler
-            )
-            server.daemon_threads = True
-            servers.append(server)
-            groups.append([("127.0.0.1", server.server_address[1])])
-            threading.Thread(
-                target=server.serve_forever, daemon=True
-            ).start()
-
-        bronze = bronze_from_sbs1_fanin(
-            spark,
-            groups,
-            connect_attempt_limit=5,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_fanin_test")
-            .option("checkpointLocation", str(tmp_path / "fckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            want = sum(len(v) for v in per_group.values())
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                n = spark.sql(
-                    "SELECT count(*) FROM sbs1_fanin_test"
-                ).collect()[0][0]
-                if n >= want:
-                    break
-                time.sleep(1)
-            rows = spark.sql("SELECT * FROM sbs1_fanin_test").collect()
-            got = sorted(r["value"] for r in rows)
-            expect = sorted(l for ls in per_group.values() for l in ls)
-            assert got == expect  # exactly once across both instances
-        finally:
-            q.stop()
-    finally:
-        for server in servers:
-            server.shutdown()
-            server.server_close()

@@ -10,6 +10,10 @@ Generation is INCLUDED in the measurement (same discipline as the
 original round-2 number): the point is an end-to-end lower bound on
 what one box pushes through the full typed Silver projection, not a
 parser microbenchmark.
+
+Source-inclusive modes (see each function's docstring): ``multi`` (the
+Python ``sbs1`` source over N TCP feeds), ``jvm`` (the ``sbs1-jvm``
+source) and ``procs`` (concurrent ``multi`` drivers).
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ from dump1090_stream_parser_spark.sources.sbs1 import (  # noqa: E402
 
 
 def synth_events(spark, n: int, cpus: int):
-    """The deterministic events frame BOTH bench modes synthesize lines
+    """The deterministic events frame EVERY bench mode synthesizes lines
     from -- shared so the parse-path and source-inclusive numbers stay
     comparable by construction (same aircraft modulus, same timestamps)."""
     return spark.range(n).repartition(cpus).select(
@@ -85,133 +89,14 @@ def main() -> None:
     spark.stop()
 
 
-def source_main() -> None:
-    """Source-INCLUSIVE throughput (VERDICT r5 #6): the same
-    deterministic MSG,3 lines, but delivered over a real localhost TCP
-    socket through the production ``sbs1`` streaming source
-    (connect/recv/carry-buffer framing/ingest_ts stamping) into
-    ``parse_lines`` -> ``silver`` under Structured Streaming. This
-    bounds the whole ingest path, not just the typed projection: the
-    sbs1 reader is a driver-side SimpleDataSourceStreamReader (one
-    socket == one receiver, SURVEY.md §3.2), so its drain loop is
-    single-threaded by design and the number here is expected to sit
-    well below the parallel parse-path figure -- that is the point of
-    recording it separately.
-
-        python tools/ingest_bench.py source [n_rows]
-    """
-    import socket
-    import threading
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="ingest_bench_source",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    events = synth_events(spark, n, int(cpus))
-    payload = (
-        "\n".join(
-            sbs1_lines_from_events(events).toPandas()["value"]
-        ).encode()
-        + b"\n"
-    )
-
-    server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", 0))
-    server.listen(1)
-    port = server.getsockname()[1]
-
-    def serve() -> None:
-        conn, _ = server.accept()
-        try:
-            conn.sendall(payload)
-            # keep the socket open: an EOF would trigger the reader's
-            # reconnect loop mid-measurement
-            conn.recv(1)  # blocks until the bench closes the server
-        except OSError:
-            pass
-        finally:
-            conn.close()
-
-    threading.Thread(target=serve, daemon=True).start()
-
-    from dump1090_stream_parser_spark.sources import sbs1_source
-
-    sbs1_source.register(spark)
-    bronze = (
-        spark.readStream.format("sbs1")
-        .option("location", "127.0.0.1")
-        .option("port", str(port))
-        .option("max_lines_per_batch", "1000000")
-        .load()
-    )
-    sq = silver(parse_lines(bronze, parsed_time=F.col("ingest_ts")))
-
-    got = {"rows": 0}
-    lock = threading.Lock()
-
-    def count_batch(df, _epoch) -> None:
-        c = df.count()
-        with lock:
-            got["rows"] += c
-
-    import tempfile
-
-    t0 = time.perf_counter()
-    query = (
-        sq.writeStream.foreachBatch(count_batch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="ingest_bench_src_"),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        with lock:
-            if got["rows"] >= n:
-                break
-        time.sleep(0.2)
-    sec = time.perf_counter() - t0
-    query.stop()
-    server.close()
-    assert got["rows"] >= n, f"stream delivered {got['rows']}/{n} rows"
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_source_rows_per_sec",
-                "value": round(n / sec),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "seconds": round(sec, 3),
-                "cpus": int(cpus),
-                "note": (
-                    "end-to-end incl. TCP socket drain + streaming "
-                    "micro-batches; single receiver by design"
-                ),
-            }
-        )
-    )
-    spark.stop()
-
-
 def multi_main() -> None:
-    """Multi-receiver source-inclusive throughput (VERDICT r9 ask #1):
-    the same deterministic MSG,3 lines sharded over N localhost TCP
-    servers, read by the PARTITIONED ``sbs1`` reader (one concurrent
-    drain thread + one executor partition per receiver) into
-    ``parse_lines`` -> ``silver`` under Structured Streaming. The
-    figure to beat is the single-receiver ``source`` mode's ~78k
-    rows/s -- the drain loop there is single-threaded and serialized
-    with batch processing; here N receivers drain concurrently while
-    executors decode and parse in parallel.
+    """Source-inclusive throughput (VERDICT r5 #6, r9 ask #1): the same
+    deterministic MSG,3 lines sharded over N localhost TCP servers
+    (N=1 is the reference's single feed), read by the ``sbs1`` source
+    (one concurrent drain thread + its own executor partitions per
+    receiver: connect/recv/carry-buffer framing/ingest_ts stamping)
+    into ``parse_lines`` -> ``silver`` under Structured Streaming. This
+    bounds the whole ingest path, not just the typed projection.
 
         python tools/ingest_bench.py multi [n_rows] [n_receivers]
     """
@@ -315,140 +200,6 @@ def multi_main() -> None:
                     "end-to-end incl. TCP socket drain + streaming "
                     "micro-batches; partitioned reader, one concurrent "
                     "drain thread + one executor partition per receiver"
-                ),
-            }
-        )
-    )
-    spark.stop()
-
-
-def fanin_main() -> None:
-    """Fan-in throughput measurement (VERDICT r10 ask #4): the same
-    deterministic MSG,3 lines sharded over n_groups x recv_per_group
-    localhost TCP servers, read by ``bronze_from_sbs1_fanin`` -- one
-    partitioned ``sbs1`` source INSTANCE per group, unioned. MEASURED
-    RESULT (BASELINE.md round-11 row): the union does NOT scale --
-    simple-reader prefetch runs in the DRIVER process, so every
-    group's drain threads share the one driver GIL and only TOTAL
-    thread count matters (2x4 = 155k rows/s ~= the 1x8 point; a
-    process census shows exactly one Python process). The mode stays
-    as the reproduction harness for that negative.
-
-        python tools/ingest_bench.py fanin [n_rows] [n_groups] [recv_per_group]
-
-    Compare against ``multi`` at the same total receiver count to
-    isolate the runner-process effect (e.g. fanin 8000000 2 4 vs
-    multi 8000000 4 -- BASELINE.md round-11 row).
-    """
-    import socket
-    import tempfile
-    import threading
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    n_groups = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    per_group = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    n_recv = n_groups * per_group
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="ingest_bench_fanin",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    events = synth_events(spark, n, int(cpus))
-    lines = sbs1_lines_from_events(events).toPandas()["value"]
-    shard = (len(lines) + n_recv - 1) // n_recv
-    payloads = [
-        ("\n".join(lines[i * shard:(i + 1) * shard]).encode() + b"\n")
-        for i in range(n_recv)
-    ]
-
-    servers, hosts = [], []
-    for payload in payloads:
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(1)
-        servers.append(srv)
-        hosts.append(("127.0.0.1", srv.getsockname()[1]))
-
-        def serve(sock=srv, data=payload) -> None:
-            conn, _ = sock.accept()
-            try:
-                conn.sendall(data)
-                conn.recv(1)  # hold open until the bench closes
-            except OSError:
-                pass
-            finally:
-                conn.close()
-
-        threading.Thread(target=serve, daemon=True).start()
-
-    host_groups = [
-        hosts[g * per_group:(g + 1) * per_group] for g in range(n_groups)
-    ]
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    bronze = bronze_from_sbs1_fanin(
-        # per-group batch cap: same decoupled drain-vs-processing
-        # sizing as the multi bench, split across group sources
-        spark,
-        host_groups,
-        max_lines_per_batch=max(250_000 // n_groups, 50_000),
-        replay_capacity=2_000_000,
-    )
-    sq = silver(parse_lines(bronze, parsed_time=F.col("ingest_ts")))
-
-    got = {"rows": 0}
-    lock = threading.Lock()
-
-    def count_batch(df, _epoch) -> None:
-        c = df.count()
-        with lock:
-            got["rows"] += c
-
-    t0 = time.perf_counter()
-    query = (
-        sq.writeStream.foreachBatch(count_batch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="ingest_bench_fanin_"),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        with lock:
-            if got["rows"] >= n:
-                break
-        time.sleep(0.2)
-    sec = time.perf_counter() - t0
-    query.stop()
-    for srv in servers:
-        srv.close()
-    assert got["rows"] >= n, f"stream delivered {got['rows']}/{n} rows"
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_fanin_rows_per_sec",
-                "value": round(n / sec),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "n_groups": n_groups,
-                "recv_per_group": per_group,
-                "seconds": round(sec, 3),
-                "cpus": int(cpus),
-                "note": (
-                    "end-to-end incl. TCP socket drain + streaming "
-                    "micro-batches; one partitioned sbs1 source "
-                    "instance per group, unioned (all groups share "
-                    "the one driver process -- see BASELINE.md r11)"
                 ),
             }
         )
@@ -638,12 +389,8 @@ def procs_main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "source":
-        source_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "multi":
+    if len(sys.argv) > 1 and sys.argv[1] == "multi":
         multi_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "fanin":
-        fanin_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "jvm":
         jvm_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "procs":
