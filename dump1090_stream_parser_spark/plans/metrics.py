@@ -117,3 +117,17 @@ def executed_stage_signature(spark, build_fn) -> dict[str, int]:
     build_fn().write.format("noop").mode("overwrite").save()
     after = stage_shuffle_snapshot(spark)
     return stage_shuffle_delta(before, after)
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far (a
+    cumulative count; diff two reads around a query).
+
+    Spark keeps compiled classes in an LRU cache keyed by the generated
+    source (``spark.sql.codegen.cache.maxEntries``), so a query whose
+    classes are all cached compiles nothing: a non-zero count on a
+    repeat run means either eviction or a per-run value in the
+    generated code. Read from ``CodegenMetrics``, a JVM-wide static
+    counter, so it needs no UI and counts every session in the JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -12,6 +12,14 @@ that we convert to microsecond timestamps ourselves.
 Everything in ``RUNTIME_CONF`` is runtime-settable, so the same settings
 can be applied to a SparkSession we did not create (the driver harness
 owns the session used by ``__spark_entry__``).
+
+:func:`get_spark` also sets static confs, which take effect only when
+it launches the JVM; a session someone else created (the driver
+harness's) keeps Spark's defaults for them. One sizes the compiled-class
+cache to the engine's working set of generated classes
+(``CODEGEN_CACHE_ENTRIES``): at Spark's default of 100 entries every
+repeat run re-compiled its classes with Janino, and the JIT then
+compiled the new classes again.
 """
 
 from __future__ import annotations
@@ -41,6 +49,18 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+#: Entries of Spark's compiled-class cache (static conf). Measured at
+#: sf0.01 on local[4]: one pass of the benchmark's four-query mix
+#: generates 105-114 distinct classes and bench.py's 109-query headline
+#: ~1,650, so the default of 100 evicted every class before its next use
+#: (a repeat headline rep compiled ~2,110 classes; with this size it
+#: compiles 58-76, see BASELINE.md). 4096 is 2.5x the headline's working
+#: set. Each cached class holds its loaded bytecode in metaspace and its
+#: generated source and factory on the heap: for the full headline,
+#: +14-15 MB metaspace and +42-54 MB old gen after a full GC.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply engine conf to an externally created session (idempotent)."""
     for key, value in RUNTIME_CONF.items():
@@ -63,6 +83,15 @@ def get_spark(
     ``shuffle_partitions`` is a *ceiling*: with AQE on, Spark coalesces
     post-shuffle partitions down to fit actual data volume, so a value
     sized for the largest query is safe for the smallest.
+
+    Besides ``RUNTIME_CONF`` this sets static confs: driver memory, the
+    result-size cap, the UI, and the compiled-class cache
+    (``CODEGEN_CACHE_ENTRIES``). They apply only when this call starts
+    the JVM; ``getOrCreate`` on a live session keeps the values it was
+    started with. The class cache costs memory in proportion to the
+    classes actually generated, not to its size (56-70 MB of metaspace
+    and old gen for the whole headline working set).
+    ``extra_conf`` is applied last and overrides any of them.
     """
     # Local mode = one JVM for driver+executors; size it for the machine
     # (static conf -- only effective when this call creates the JVM).
@@ -74,6 +103,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", memory)
         .config("spark.driver.maxResultSize", "4g")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

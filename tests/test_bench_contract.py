@@ -98,6 +98,10 @@ def test_bench_emits_driver_contract_json():
     assert detail["queries_min"].keys() == detail["queries_mean"].keys()
     for name, vmin in detail["queries_min"].items():
         assert vmin <= detail["queries_mean"][name] + 1e-9
+    # one Janino compile count per query per rep
+    compiles = detail["codegen_compiles"]
+    assert compiles.keys() == detail["queries_min"].keys()
+    assert all(len(c) == detail["reps"] for c in compiles.values())
     # the contract dict is the top of the min distribution at constant
     # 2-decimal grain -- never a degraded-grain copy of everything
     for name, v in payload["queries"].items():
